@@ -1425,7 +1425,9 @@ def _gram_pair_scorer(thr: float):
             hi = min(lo + chunk, m)
             sims = mat[lo:hi] @ mat.T  # (hi-lo, m)
             ia, ib = np.nonzero(sims >= thr)
-            keep = (ia + lo) < ib  # upper triangle only (a < b)
+            # compare id VALUES, not positions: a duplicated vec_id
+            # would otherwise pair with itself as (x, x, 1.0)
+            keep = ids[ia + lo] < ids[ib]
             if keep.any():
                 parts.append(
                     pd.DataFrame(

@@ -23,10 +23,14 @@ Mechanical deltas from the reference, by design:
   is not sustainable at its own 1 s interval; cadence is the caller's
   policy knob (see streaming/recommend_stream.py).
 
-Scale: ALS itself is Spark-distributed (block factorization). The
-ratings union grows unboundedly — ``add_ratings`` checkpoints lineage
-via a localCheckpoint every ``_CHECKPOINT_EVERY`` batches so the plan
-doesn't deepen linearly over a long-lived stream.
+Scale: ALS itself is Spark-distributed (block factorization). Every
+``add_ratings`` leaves history as ONE materialized leaf (an eager
+localCheckpoint of old ∪ new), never a lazy union: ``unionByName``
+flattens nested unions, so ``cached.unionByName(batch)`` no longer
+matches the cache entry of ``cached``, and a lazy cache whose
+predecessor is already unpersisted re-runs the whole lineage — the
+base ETL plus every earlier batch — in each serve and retrain. Exactly
+one history snapshot stays resident.
 """
 
 from __future__ import annotations
@@ -43,8 +47,6 @@ from .operators.relational import (
     top_k,
     union_ratings,
 )
-
-_CHECKPOINT_EVERY = 10
 
 
 class RecommendationEngine:
@@ -72,7 +74,6 @@ class RecommendationEngine:
         self.seed = seed
         self.min_ratings = min_ratings
         self.model: ALSModel | None = None
-        self._adds_since_checkpoint = 0
         self._ckpt_rdd_ids: set[int] = set()
         self._refresh_counts()
 
@@ -101,31 +102,25 @@ class RecommendationEngine:
         """Union new ratings into history (U1). The reference retrains on
         every add; here it's a flag so streaming callers set cadence.
 
-        Storage is strictly bounded on a long-lived stream: exactly one
-        ratings snapshot stays resident. On checkpoint cycles the union
-        is NOT separately cached (localCheckpoint materializes it), and
-        the PREVIOUS cycle's checkpoint blocks are freed explicitly by
-        RDD id — ``DataFrame.unpersist()`` does not release a
-        localCheckpoint's internal RDD (see operators/dedup.py::
-        _unpersist_rdds), which previously leaked one full snapshot per
-        cycle."""
+        History becomes old ∪ new materialized as one leaf by an eager
+        localCheckpoint, so serving and retraining scan that leaf instead
+        of recomputing the lineage: a lazy ``union.cache()`` never
+        matches (``unionByName`` flattens the nested union), and once the
+        old snapshot is unpersisted every later plan re-reads the base
+        source and all earlier batches. Exactly one snapshot stays
+        resident: the previous leaf's blocks are freed by RDD id, since
+        ``DataFrame.unpersist()`` does not release a localCheckpoint's
+        internal RDD (see operators/dedup.py::_unpersist_rdds), and
+        ``old.unpersist()`` releases the caller's initial cache."""
         from .operators.dedup import _persistent_rdd_ids, _unpersist_rdds
 
         sc = self.spark.sparkContext
         old = self.ratings
-        union = union_ratings(self.ratings, new_ratings)
-        self._adds_since_checkpoint += 1
-        if self._adds_since_checkpoint >= _CHECKPOINT_EVERY:
-            # Truncate lineage: after N unions the plan is N levels deep;
-            # localCheckpoint materializes and resets it.
-            pre = _persistent_rdd_ids(sc)
-            self.ratings = union.localCheckpoint(eager=True)
-            new_ckpt = _persistent_rdd_ids(sc) - pre
-            _unpersist_rdds(sc, self._ckpt_rdd_ids)
-            self._ckpt_rdd_ids = new_ckpt
-            self._adds_since_checkpoint = 0
-        else:
-            self.ratings = union.cache()
+        pre = _persistent_rdd_ids(sc)
+        self.ratings = union_ratings(old, new_ratings).localCheckpoint(eager=True)
+        new_ckpt = _persistent_rdd_ids(sc) - pre
+        _unpersist_rdds(sc, self._ckpt_rdd_ids)
+        self._ckpt_rdd_ids = new_ckpt
         old.unpersist()
         self.rating_counts.unpersist()
         self._refresh_counts()

@@ -27,6 +27,7 @@ Workloads (one per streaming family with real per-batch state):
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -42,6 +43,17 @@ _PREPARED: dict[tuple[str, str], str] = {}
 _PREPARED_ROWS: dict[str, int] = {}
 
 _N_BATCHES = 8
+
+
+def _remove_prepared() -> None:
+    """Delete every prepared source dir (registered with ``atexit``)."""
+    for d in _PREPARED.values():
+        shutil.rmtree(d, ignore_errors=True)
+        _PREPARED_ROWS.pop(d, None)
+    _PREPARED.clear()
+
+
+atexit.register(_remove_prepared)
 
 
 def _prep(kind: str, sf_dir: str, build) -> str:

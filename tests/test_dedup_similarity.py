@@ -237,6 +237,22 @@ def test_embedding_near_dup_bucketed_path_no_self_join(spark):
     assert got == want  # θ≈0 pairs collide in some rotation w.p. ≈ 1
 
 
+@pytest.mark.parametrize("exact_below", [10**9, 0])
+def test_embedding_near_dup_duplicate_ids_emit_no_self_pairs(spark, exact_below):
+    """A vec_id that appears twice (identical vectors, cosine 1.0) must
+    not pair with itself: the scorer keeps id_a < id_b by id VALUE,
+    not by row position in the sorted group."""
+    rows = [(1, [1.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0]),
+            (2, [1.0, 0.001, 0.0]), (3, [0.0, 1.0, 0.0])]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    pairs = dd.embedding_near_dup_pairs(
+        vecs, threshold=0.99, exact_below=exact_below, n_planes=2,
+        n_rotations=2, dim=3,
+    ).collect()
+    assert all(r["id_a"] != r["id_b"] for r in pairs)
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
+
+
 def test_ivf_kmeans_codebook_recall(spark, emb):
     """IVF with a REAL KMeans codebook (the production path the
     deterministic sample stands in for): k rows per query, and recall

@@ -153,6 +153,26 @@ def test_stream_micro_benches_run_bounded(spark, sf_dir):
         fn(spark, sf_dir)
 
 
+def test_stream_micro_prepared_dirs_removed_by_cleanup():
+    """Prepared micro-bench source dirs are temp dirs; the atexit
+    cleanup deletes them and forgets them (no leak per process)."""
+    import os
+
+    from spark_streaming_kafka_spark.streaming import microbench as mb
+
+    def build(d: str) -> None:
+        with open(os.path.join(d, "batch_000.parquet"), "w") as f:
+            f.write("x")
+
+    d = mb._prep("cleanup_probe", "no_sf_dir", build)
+    mb._PREPARED_ROWS[d] = 1
+    assert os.path.isdir(d)
+    mb._remove_prepared()
+    assert not os.path.exists(d)
+    assert ("cleanup_probe", "no_sf_dir") not in mb._PREPARED
+    assert d not in mb._PREPARED_ROWS
+
+
 def test_item_cooccurrence_hot_basket_dropped_whole(spark):
     """item_cooccurrence_topk's r12 window truncate must equal the r11
     semantics: an over-cap basket is dropped WHOLE, so the output over

@@ -163,8 +163,9 @@ def test_best_rank_search(spark, ratings):
 
 def test_add_ratings_bounds_persisted_storage(spark, tables):
     """Long-lived incremental ingestion keeps a BOUNDED set of
-    persisted RDDs: superseded caches and checkpoint blocks are freed
-    every cycle (previously ~2 leaked snapshots per checkpoint)."""
+    persisted RDDs: each add's superseded snapshot and its
+    rating-count cache are freed (previously ~2 leaked snapshots per
+    checkpoint)."""
     from pyspark.sql import functions as F
 
     from spark_streaming_kafka_spark.operators.dedup import (
@@ -187,12 +188,49 @@ def test_add_ratings_bounds_persisted_storage(spark, tables):
     new = spark.createDataFrame(
         [(999, 1, 5.0)], "user_id int, song_id int, rating double"
     )
-    for _ in range(25):  # crosses two checkpoint cycles
+    for _ in range(25):  # 25 superseded snapshots, one resident
         eng.add_ratings(new, retrain=False)
     after = len(_persistent_rdd_ids(sc))
     assert after - before <= 4  # bounded, not ~2 per cycle
 
     eng.ratings.unpersist()
+    eng.rating_counts.unpersist()
+
+
+def test_add_ratings_leaves_history_independent_of_base_source(
+    tmp_path, spark
+):
+    """After an add, history is one materialized leaf: serving and the
+    next add never re-read the base source (a lazy cached union
+    re-ran the whole lineage, base scan included, on every plan)."""
+    import shutil
+
+    base_dir = str(tmp_path / "base_ratings")
+    rows = [
+        (u, s, float(1 + (u * s) % 5))
+        for u in range(12)
+        for s in range(15)
+        if (u + s) % 3 != 0  # every user keeps unrated catalog songs
+    ]
+    spark.createDataFrame(
+        rows, "user_id int, song_id int, rating double"
+    ).write.parquet(base_dir)
+    eng = RecommendationEngine(
+        spark, spark.read.parquet(base_dir), rank=4, min_ratings=1
+    )
+    eng.retrain()
+    schema = "user_id int, song_id int, rating double"
+    b1 = spark.createDataFrame([(0, 0, 5.0), (1, 2, 4.0)], schema)
+    eng.add_ratings(b1, retrain=False)
+    shutil.rmtree(base_dir)
+    b2 = spark.createDataFrame([(3, 0, 5.0), (3, 3, 1.0), (4, 2, 3.0)], schema)
+    eng.add_ratings(b2, retrain=False)
+    recs = eng.get_top_ratings_for_users(b2.select("user_id"), 5).collect()
+    assert recs
+    just_rated = {(3, 0), (3, 3), (4, 2)}
+    assert not {(r["user_id"], r["song_id"]) for r in recs} & just_rated
+    assert eng.ratings.count() == len(rows) + 2 + 3
+
     eng.rating_counts.unpersist()
 
 

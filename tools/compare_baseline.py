@@ -5,10 +5,14 @@ Contextualizes BENCH numbers against a single-process columnar engine
 numbers). Both engines run warm; DuckDB gets all threads.
 
 Usage: python tools/compare_baseline.py [sf_dir] [--json OUT.json]
-                                        [--queries NAME ...]
+                                        [--queries NAME [NAME ...]]
 Prints one JSON line: {query: {"duckdb": s, "spark": s, "ratio": r}}.
 Default query set is the bench HEADLINE suite; ``--queries`` appends
-extra registry names (r12: the rewritten pipeline-tier queries).
+extra registry names (r12: the rewritten pipeline-tier queries). A
+``--queries`` entry that is not a registry name is an error, so a
+positional ``sf_dir`` placed after the list fails loudly instead of
+silently falling back to the default dir. ``sf_dir`` defaults to
+bench.py's ``SPARK_GRAFT_SF_DIR`` default.
 
 Reading the ratios (see README "Performance vs single-process
 baseline"): sub-100 ms DuckDB queries sit under Spark's ~0.3 s per-job
@@ -18,6 +22,7 @@ queries with real compute land within ~2x either way.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -27,25 +32,29 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_args = list(sys.argv[1:])
-JSON_OUT = None
-if "--json" in _args:
-    i = _args.index("--json")
-    JSON_OUT = _args[i + 1]
-    del _args[i : i + 2]
-EXTRA_QUERIES: list[str] = []
-if "--queries" in _args:
-    i = _args.index("--queries")
-    EXTRA_QUERIES = _args[i + 1 :]
-    del _args[i:]
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.1"
-
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    import bench
+    from spark_streaming_kafka_spark.queries import REGISTRY
+
+    p = argparse.ArgumentParser(description="Spark vs DuckDB, same SF.")
+    p.add_argument("sf_dir", nargs="?", default=bench.SF_DIR)
+    p.add_argument("--json", dest="json_out", metavar="OUT.json")
+    p.add_argument("--queries", nargs="+", default=[], metavar="NAME",
+                   help="extra registry queries after the HEADLINE suite")
+    args = p.parse_args(argv)
+    unknown = [q for q in args.queries if q not in REGISTRY]
+    if unknown:
+        p.error(f"--queries: not in REGISTRY: {' '.join(unknown)}")
+    return args
+
+
 def main() -> None:
+    args = parse_args()
     import bench
     from spark_streaming_kafka_spark import get_spark
     from spark_streaming_kafka_spark.queries import REGISTRY
@@ -53,7 +62,7 @@ def main() -> None:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
         )
 
     spark = get_spark("compare_baseline")
@@ -62,13 +71,13 @@ def main() -> None:
     import gc
 
     out: dict[str, dict[str, float]] = {}
-    for name in list(bench.HEADLINE) + EXTRA_QUERIES:
+    for name in list(bench.HEADLINE) + args.queries:
         fn, sql = REGISTRY[name]
         spark.catalog.clearCache()  # release blocks orphaned upstream
         gc.collect()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
+        fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()  # warm
         t0 = time.time()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
         s_spark = time.time() - t0
         if sql is None:
             out[name] = {"spark": round(s_spark, 3)}
@@ -83,9 +92,9 @@ def main() -> None:
             "ratio": round(s_spark / s_duck, 2) if s_duck > 0 else None,
         }
     print(json.dumps(out))
-    if JSON_OUT:
-        with open(JSON_OUT, "w") as f:
-            json.dump({"sf_dir": SF_DIR, "queries": out}, f, indent=1)
+    if args.json_out:
+        with open(args.json_out, "w") as f:
+            json.dump({"sf_dir": args.sf_dir, "queries": out}, f, indent=1)
     spark.stop()
 
 
