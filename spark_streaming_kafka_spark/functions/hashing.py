@@ -14,9 +14,18 @@ both engines (DuckDB: ``('0x' || substr(md5(s),1,15))::BIGINT``).
 At 100 TB scale md5-per-token is still JVM-native and vectorizable by
 whole-stage codegen; swap to ``xxhash64`` via ``fast=True`` when oracle
 portability is not required (same downstream algebra, ~3× cheaper).
+
+Python-side operators (Arrow-batch UDFs, driver-built constants) hash
+with :func:`md5_60` / :func:`md5_60_batch`, the value-identical twin —
+the one place that expression lives.
 """
 
 from __future__ import annotations
+
+import hashlib
+from collections.abc import Collection
+
+import numpy as np
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -34,13 +43,22 @@ def md5_long(col: Column | str, fast: bool = False) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def universal_hash(h: Column, a: int, b: int, p: int = MERSENNE_P) -> Column:
-    """Universal hash family member: (a*h + b) mod p.
+def md5_60(s: str) -> int:
+    """Python twin of :func:`md5_long`: ``int(md5(s).hexdigest()[:15], 16)``.
+    15 hex digits are 7.5 bytes, so the 8-byte big-endian prefix
+    shifted right by 4 is the same value without hex parsing."""
+    return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 4
 
-    ``h`` must be < 2^60 / a to avoid 64-bit overflow; md5_long values are
-    reduced mod p first so a*h stays < 2^62.
-    """
-    return (F.lit(a) * (h % F.lit(p)) + F.lit(b)) % F.lit(p)
+
+def md5_60_batch(tokens: Collection[str], memo: dict[str, int]) -> np.ndarray:
+    """:func:`md5_60` of every token as an int64 array, memoised in
+    ``memo``. Scope the memo to one Arrow batch: repeated tokens across
+    its documents hash once, and memory stays bounded by the batch's
+    vocabulary."""
+    for s in tokens:
+        if s not in memo:
+            memo[s] = md5_60(s)
+    return np.fromiter(map(memo.__getitem__, tokens), dtype=np.int64, count=len(tokens))
 
 
 def duckdb_md5_long(expr: str) -> str:

@@ -103,11 +103,10 @@ def jl_sign_matrix(d_in: int, d_out: int, salt: str = "rp") -> list[list[float]]
     side cost is microseconds, and the matrix travels to executors as
     plan literals, not data.
     """
-    import hashlib
+    from .hashing import md5_60
 
     def sign(j: int, i: int) -> float:
-        h = int(hashlib.md5(f"{salt}_{j}_{i}".encode()).hexdigest()[:15], 16)
-        return 1.0 if h % 2 == 0 else -1.0
+        return 1.0 if md5_60(f"{salt}_{j}_{i}") % 2 == 0 else -1.0
 
     return [[sign(j, i) for i in range(d_out)] for j in range(d_in)]
 

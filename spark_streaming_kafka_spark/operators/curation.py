@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long
+from ..functions.hashing import md5_60, md5_long
 from .dedup import word_shingles
 
 __all__ = [
@@ -849,10 +849,8 @@ def content_defined_chunks(
     empty docs yield nothing.
 
     Scale shape: Arrow-batched ``mapInPandas`` — one linear pass per
-    document, zero shuffle, hashing-parity with ``md5_long`` via the
-    md5-digest-prefix trick the pandas MinHash twin established
-    (``int.from_bytes(md5[:8]) >> 4 == int(hex[:15], 16)``, asserted
-    in tests). The Catalyst column-algebra formulation was measured
+    document, zero shuffle, hashing-parity with ``md5_long`` via its
+    Python twin ``hashing.md5_60`` (asserted in tests). The Catalyst column-algebra formulation was measured
     and rejected: the span/boundary arrays are each referenced once,
     so CollapseProject inlines the whole chain into the explode's
     generator expression and the shingle-hash array re-evaluates per
@@ -860,8 +858,6 @@ def content_defined_chunks(
     (the same Catalyst-lambda recompute that made
     ``minhash_signatures`` default to its pandas strategy).
     """
-    import hashlib
-
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -885,9 +881,6 @@ def content_defined_chunks(
     schema = StructType(fields)
     kk, div, with_text = k, divisor, include_text
 
-    def _h60(s: str) -> int:
-        return int.from_bytes(hashlib.md5(s.encode()).digest()[:8], "big") >> 4
-
     def chunk(batches):
         import pandas as pd
 
@@ -903,7 +896,7 @@ def content_defined_chunks(
                 bounds = [
                     j
                     for j in range(kk, n + 1)
-                    if _h60(" ".join(toks[j - kk : j])) % div == 0
+                    if md5_60(" ".join(toks[j - kk : j])) % div == 0
                 ]
                 ci = 0
                 for s, e in zip([1] + [b + 1 for b in bounds], bounds + [n]):
@@ -914,7 +907,7 @@ def content_defined_chunks(
                     out["doc_id"].append(did)
                     out["chunk_idx"].append(ci)
                     out["n_tokens"].append(e - s + 1)
-                    out["chunk_hash"].append(_h60(piece))
+                    out["chunk_hash"].append(md5_60(piece))
                     if with_text:
                         out["chunk_text"].append(piece)
             if out["doc_id"]:

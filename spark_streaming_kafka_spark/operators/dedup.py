@@ -15,7 +15,11 @@ Five escalating strategies over a ``documents(doc_id, text, ...)`` table:
 
 All hashing uses the engine-portable ``md5_long`` (functions/hashing.py)
 so the DuckDB oracle reproduces results exactly; swap ``fast=True`` →
-``xxhash64`` in production where no external verifier must agree.
+``xxhash64`` in production where no external verifier must agree. The
+Arrow-batch strategies hash tokens with its Python twin
+``hashing.md5_60_batch`` (one memo per batch) and do their numpy work —
+MinHash mins, sign-bit buckets, threshold pairs — in
+``operators/kernels.py``.
 
 Scale analysis (the reason each exists):
   exact       O(n) + one shuffle on text-hash.
@@ -38,7 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..functions.hashing import MERSENNE_P, md5_long
+from ..functions.hashing import MERSENNE_P, md5_60_batch, md5_long
+from .kernels import minhash_mins, pairs_at_least, sign_buckets, unit_rows
 from .skew import fan_out
 
 # Deterministic universal-hash parameters for MinHash permutations,
@@ -180,8 +185,9 @@ def minhash_signatures(
     signature). Two execution strategies, IDENTICAL values:
 
     - ``"pandas"`` (default) — one Arrow-batched ``mapInPandas`` pass:
-      shingle in Python, md5 via hashlib (C), all permutation mins as
-      one numpy broadcast per doc. ZERO shuffle (signatures are per-row
+      shingle in Python, md5 via hashlib (C, memoised per Arrow batch),
+      all permutation mins as one numpy broadcast per doc
+      (``kernels.minhash_mins``). ZERO shuffle (signatures are per-row
       facts), and 4× faster than the expression path at sf0.1 (0.38 s
       vs 1.60 s) because Catalyst runs higher-order array lambdas
       (transform/slice shingling) interpreted, outside whole-stage
@@ -227,57 +233,45 @@ def minhash_signatures(
     return mins.select("doc_id", sig.alias("signature"))
 
 
+def _minhash_arrays(num_perm: int):
+    """The ``minhash_params`` (a, b) pairs as two int64 arrays."""
+    import numpy as np
+
+    a, b = zip(*minhash_params(num_perm))
+    return np.array(a, dtype=np.int64), np.array(b, dtype=np.int64)
+
+
+def _doc_minhashes(pdf: pd.DataFrame, text_col: str, id_col: str, k: int, a, b):
+    """(doc_id, signature) for every doc of one Arrow batch that has a
+    shingle (expr parity: no shingles → no row). Token hashes are
+    memoised per batch: a near-dup corpus is exactly the input where
+    shingles repeat across documents."""
+    memo: dict[str, int] = {}
+    for did, text in zip(pdf[id_col], pdf[text_col]):
+        sh = _py_shingles(text or "", k)
+        if sh:
+            yield did, minhash_mins(md5_60_batch(sh, memo), a, b)
+
+
 def _minhash_signatures_pandas(
     docs: DataFrame, num_perm: int, k: int, text_col: str, id_col: str
 ) -> DataFrame:
     """Arrow/numpy MinHash twin (see :func:`minhash_signatures`).
     Tokenization/hashing parity: ``_py_shingles`` mirrors
-    ``word_shingles`` and hashlib-md5-prefix mirrors ``md5_long``, so
+    ``word_shingles`` and ``md5_60`` mirrors ``md5_long``, so
     signatures are value-identical (asserted in tests)."""
-    import hashlib
-
-    import numpy as np
-
-    params = minhash_params(num_perm)
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    kk = k
+    a, b = _minhash_arrays(num_perm)
 
     def sign(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, sigs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                sh = _py_shingles(text or "", kk)
-                if not sh:
-                    continue  # expr parity: no shingles → no row
-                # == int(hexdigest[:15], 16): 15 hex chars = 7.5 bytes,
-                # so the 8-byte big-endian int >> 4 is the same value
-                # (cheaper than hex-string parsing; asserted in tests)
-                hs = np.fromiter(
-                    (
-                        (
-                            int.from_bytes(
-                                hashlib.md5(s.encode()).digest()[:8], "big"
-                            )
-                            >> 4
-                        )
-                        % MERSENNE_P
-                        for s in sh
-                    ),
-                    dtype=np.int64,
-                    count=len(sh),
-                )
-                ids.append(did)
-                sigs.append(((A * hs[None, :] + B) % MERSENNE_P).min(axis=1))
-            if not ids:  # all-dropped batch: yielding an untyped empty
+            rows = list(_doc_minhashes(pdf, text_col, id_col, k, a, b))
+            if not rows:  # all-dropped batch: yielding an untyped empty
                 continue  # frame breaks Arrow's list<int64> conversion
             yield pd.DataFrame(
                 {
-                    "doc_id": pd.Series(ids),
+                    "doc_id": pd.Series([did for did, _ in rows]),
                     "signature": pd.Series(
-                        [s.tolist() for s in sigs], dtype="object"
+                        [sig.tolist() for _, sig in rows], dtype="object"
                     ),
                 }
             )
@@ -303,48 +297,14 @@ def _minhash_band_keys_pandas(
     the signature table — same key format ('_'-joined band-slice
     values; parity pinned in tests), one fewer plan segment, and the
     5000×num_perm signature arrays never round-trip through Arrow or
-    the interpreted named_struct/concat_ws projection.
-
-    Also memoizes md5 per UNIQUE shingle within each Arrow batch: a
-    near-dup corpus is exactly the input where shingles repeat across
-    documents, so the hash count drops toward |unique shingles| instead
-    of Σ|doc shingles|.
-    """
-    import hashlib
-
-    import numpy as np
-
-    params = minhash_params(num_perm)
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
+    the interpreted named_struct/concat_ws projection."""
+    a, b = _minhash_arrays(num_perm)
     rows = num_perm // bands
-    kk = k
 
     def emit(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            memo: dict[str, int] = {}
             ids, bnd, keys = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                sh = _py_shingles(text or "", kk)
-                if not sh:
-                    continue  # parity: no shingles -> no rows
-                hs = np.empty(len(sh), dtype=np.int64)
-                for j, s in enumerate(sh):
-                    v = memo.get(s)
-                    if v is None:
-                        # == int(hexdigest[:15], 16) — see
-                        # _minhash_signatures_pandas for the bit math
-                        v = (
-                            int.from_bytes(
-                                hashlib.md5(s.encode()).digest()[:8], "big"
-                            )
-                            >> 4
-                        ) % MERSENNE_P
-                        memo[s] = v
-                    hs[j] = v
-                sig = ((A * hs[None, :] + B) % MERSENNE_P).min(axis=1)
+            for did, sig in _doc_minhashes(pdf, text_col, id_col, k, a, b):
                 for i in range(bands):
                     ids.append(did)
                     bnd.append(i)
@@ -650,8 +610,8 @@ def simhash_fingerprints(
     fingerprints (see :func:`minhash_signatures` for the trade):
 
     - ``"pandas"`` (default): one ``mapInPandas`` pass — hashlib md5
-      per token, the 60 bit-votes as one numpy unpack+sum per doc,
-      zero shuffle.
+      per distinct token of each Arrow batch, the 60 bit-votes as one
+      numpy unpack+sum per doc, zero shuffle.
     - ``"expr"``: explode tokens → md5 once per token → one
       hash-aggregate with 60 ``sum(±1 per bit)`` columns → re-assemble
       sign bits. Fully codegen'd JVM path; shuffle = one 60-column row
@@ -689,10 +649,9 @@ def _simhash_fingerprints_pandas(
     docs: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """Arrow/numpy SimHash twin (see :func:`simhash_fingerprints`):
-    identical md5-prefix token hashes, tf-weighted ±1 votes per bit,
-    sign-bit reassembly — value parity asserted in tests."""
-    import hashlib
-
+    identical md5-prefix token hashes (memoised per Arrow batch),
+    tf-weighted ±1 votes per bit, sign-bit reassembly — value parity
+    asserted in tests."""
     import numpy as np
 
     bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
@@ -701,22 +660,13 @@ def _simhash_fingerprints_pandas(
         for pdf in batches:
             if pdf.empty:
                 continue
+            memo: dict[str, int] = {}
             ids, fps = [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 toks = [t for t in (text or "").split(" ") if t]
                 if not toks:
                     continue  # expr parity: no tokens → no row
-                hs = np.fromiter(
-                    (
-                        int.from_bytes(
-                            hashlib.md5(t.encode()).digest()[:8], "big"
-                        )
-                        >> 4
-                        for t in toks
-                    ),
-                    dtype=np.int64,
-                    count=len(toks),
-                )
+                hs = md5_60_batch(toks, memo)
                 bits = (hs[:, None] >> bit_idx[None, :]) & 1  # (n_tok, 60)
                 votes = (2 * bits - 1).sum(axis=0)
                 fps.append(int(((votes > 0).astype(np.int64) << bit_idx).sum()))
@@ -1112,14 +1062,6 @@ def _seg_len(l2: Column, i: int, k: int) -> Column:
     return (base + (F.lit(i) >= (k - l2 % k)).cast("long")).cast("int")
 
 
-def _seg_start(l2: Column, i: int, k: int) -> Column:
-    """0-based start of segment ``i`` = Σ lengths of segments < i."""
-    s = F.lit(0).cast("int")
-    for j in range(i):
-        s = s + _seg_len(l2, j, k)
-    return s
-
-
 def passjoin_edit_distance_pairs(
     df: DataFrame,
     block_col: str,
@@ -1393,52 +1335,16 @@ def embedding_near_dup_pairs(
 
 
 def _gram_pair_scorer(thr: float):
-    """pandas scorer for within-group near-dup pairs: normalize the
-    group's vectors, one chunked BLAS gram pass, emit (id_a < id_b,
-    cosine ≥ thr). Shared by the sign-LSH bucketed path (per bucket)
-    and the exact path (one degenerate bucket). Chunked upper-triangle
-    scoring: peak memory is chunk×m doubles, not m×m — an oversized
-    group degrades to more gemm calls instead of an executor OOM
-    (near-dup pairs are sparse, so the kept-pair output stays small
-    either way)."""
-    import numpy as np
+    """pandas scorer for within-group near-dup pairs: emit (id_a < id_b,
+    cosine ≥ thr) from one chunked BLAS gram pass over the group's unit
+    rows (:func:`.kernels.pairs_at_least` — peak memory chunk×m, pairs
+    by id value). Shared by the sign-LSH bucketed path (per bucket) and
+    the exact path (one degenerate bucket)."""
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="int64"),
-                "id_b": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-            }
-        )
-        if len(pdf) < 2:
-            return empty
         ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        mat = np.vstack(pdf["vec"].to_numpy()[order]).astype(np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        m = len(ids)
-        chunk = 2048
-        parts = []
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            sims = mat[lo:hi] @ mat.T  # (hi-lo, m)
-            ia, ib = np.nonzero(sims >= thr)
-            # compare id VALUES, not positions: a duplicated vec_id
-            # would otherwise pair with itself as (x, x, 1.0)
-            keep = ids[ia + lo] < ids[ib]
-            if keep.any():
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "id_a": ids[ia[keep] + lo],
-                            "id_b": ids[ib[keep]],
-                            "cosine": sims[ia[keep], ib[keep]],
-                        }
-                    )
-                )
-        return pd.concat(parts, ignore_index=True) if parts else empty
+        a, b, cos = pairs_at_least(ids, unit_rows(pdf["vec"].to_numpy()), thr)
+        return pd.DataFrame({"id_a": ids[a], "id_b": ids[b], "cosine": cos})
 
     return score
 
@@ -1473,7 +1379,6 @@ def _bucketed_near_dup_pairs(
         ],
         dtype=np.float64,
     )  # (rotations, planes, dim)
-    weights = np.int64(1) << np.arange(n_planes, dtype=np.int64)
     n_rot = n_rotations
     thr = threshold
 
@@ -1483,13 +1388,12 @@ def _bucketed_near_dup_pairs(
                 continue
             m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
             for r in range(n_rot):
-                bits = (m @ planes[r].T) >= 0.0
                 yield pd.DataFrame(
                     {
                         "vec_id": pdf[id_col],
                         "vec": pdf[vec_col],
                         "rot": r,
-                        "bucket": bits @ weights,
+                        "bucket": sign_buckets(m, planes[r]),
                     }
                 )
 

@@ -367,8 +367,7 @@ def video_fingerprint(
     the per-frame hash here is the same building block.) One Arrow
     mapInPandas decode pass; 8-byte fingerprints shuffle, multi-MB
     payloads never do."""
-    import hashlib
-
+    from ..functions.hashing import md5_60
     from .media_codecs import decode_avi, resize_nearest
 
     out_schema = f"{id_col} long, vfp long"
@@ -383,7 +382,7 @@ def video_fingerprint(
                     gray = fr.mean(axis=2)
                     hs.append(str(ahash60(resize_nearest(gray, 8, 8))))
                 joined = "_".join(hs)
-                vfp = int(hashlib.md5(joined.encode()).hexdigest()[:15], 16)
+                vfp = md5_60(joined)
                 ids.append(mid)
                 fps.append(vfp)
             yield pd.DataFrame({id_col: ids, "vfp": pd.array(fps, dtype="int64")})

@@ -24,6 +24,10 @@ trees cost more to codegen-compile than to run — measured on the IVF
 codebook (see :func:`ivf_assign`) and re-confirmed at 64 dims for both
 ANN paths. A ``pandas_udf`` dot-product (:func:`..functions.vectors`)
 remains for ad-hoc wide-vector scoring.
+
+The numpy inside those Arrow stages — unit rows, chunked top-k cuts,
+threshold pairs, sign-bit buckets — is :mod:`.kernels`; hyperplane
+components hash with :func:`..functions.hashing.md5_60`.
 """
 
 from __future__ import annotations
@@ -36,8 +40,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long
+from ..functions.hashing import md5_60, md5_long
 from ..functions.vectors import cosine_similarity
+from .kernels import pairs_at_least, sign_buckets, topk_per_row, unit_rows
 
 
 def cosine_topk(
@@ -67,43 +72,29 @@ def cosine_topk(
     """
     import numpy as np
 
-    from collections.abc import Iterator
-
     from .windows import per_group_top_k
 
     q_rows = queries.select(query_id_col, vec_col).collect()
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_mat = unit_rows([list(r[1]) for r in q_rows])
     digits = round_digits
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ q_mat.T  # (batch, nq)
-            if digits is not None:
-                sims = np.round(sims, digits)
-            sims[ids[:, None] == q_ids[None, :]] = -np.inf  # self-matches
             # per-batch partial top-k per query, same order as the final
             # ranking (cosine desc, neighbor id asc) — keeping k per
             # batch provably retains every global top-k row
-            row_order = np.argsort(ids, kind="stable")
-            s = sims[row_order].T  # (nq, batch), neighbor-id ascending
-            kk = min(k, s.shape[1])
-            top = np.argsort(-s, axis=1, kind="stable")[:, :kk]
-            cos = np.take_along_axis(s, top, axis=1).ravel()
-            keep = np.isfinite(cos)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, kk)[keep],
-                    "neighbor_id": ids[row_order][top].ravel()[keep],
-                    "cosine": cos[keep],
-                }
+            qid, nid, cos, _rank = topk_per_row(
+                q_ids,
+                q_mat,
+                pdf[id_col].to_numpy(),
+                unit_rows(pdf[vec_col].to_numpy()),
+                k,
+                digits,
             )
+            yield pd.DataFrame({"query_id": qid, "neighbor_id": nid, "cosine": cos})
 
     # CPU-bound BLAS scan: fan a single-split input to core count
     # (no-op on many-split scans); per-batch partial top-k makes the
@@ -126,13 +117,9 @@ def hyperplane(dim: int, plane: int, scale: int = 1000) -> list[float]:
     """Deterministic pseudo-random hyperplane components in [-1, 1):
     component i = (md5_long(f"{plane}_{i}") mod 2·scale − scale)/scale.
     Derivable in any engine with md5 — no RNG state to ship."""
-    import hashlib
-
-    out = []
-    for i in range(dim):
-        h = int(hashlib.md5(f"{plane}_{i}".encode()).hexdigest()[:15], 16)
-        out.append((h % (2 * scale) - scale) / scale)
-    return out
+    return [
+        (md5_60(f"{plane}_{i}") % (2 * scale) - scale) / scale for i in range(dim)
+    ]
 
 
 def signature_buckets(
@@ -196,12 +183,9 @@ def lsh_cosine_topk(
     """
     import numpy as np
 
-    from collections.abc import Iterator
-
     planes = np.array(
         [hyperplane(dim, p) for p in range(n_planes)], dtype=np.float64
     )  # (planes, dim)
-    weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
     digits = round_digits
 
     def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -209,12 +193,11 @@ def lsh_cosine_topk(
             if pdf.empty:
                 continue
             m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = (m @ planes.T) >= 0.0
             yield pd.DataFrame(
                 {
                     "vec_id": pdf[id_col],
                     "vec": pdf[vec_col],
-                    "bucket": bits @ weights,
+                    "bucket": sign_buckets(m, planes),
                 }
             )
 
@@ -227,50 +210,14 @@ def lsh_cosine_topk(
     )
 
     def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int64"),
-                "neighbor_id": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-                "rank": pd.Series(dtype="int32"),
-            }
-        )
-        if m < 2:
-            return empty
+        # the whole bucket is both the query and the reference block;
+        # topk_per_row's chunked gemm keeps a skewed bucket off OOM
         ids = pdf["vec_id"].to_numpy()
-        mat = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        col_order = np.argsort(ids, kind="stable")
-        mat_sorted = mat[col_order]
-        ids_sorted = ids[col_order]
-        kk = min(k, m - 1)
-        # Chunked over query rows: peak memory chunk×m, not m×m — a
-        # skewed bucket degrades to more gemm calls, never an OOM. Each
-        # query row's full sims row lives inside its chunk, so per-row
-        # top-k is exact.
-        chunk = 2048
-        parts = []
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            sims = mat[lo:hi] @ mat_sorted.T  # (hi-lo, m) neighbor-sorted
-            if digits is not None:
-                sims = np.round(sims, digits)
-            sims[ids[lo:hi, None] == ids_sorted[None, :]] = -np.inf  # self
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-            parts.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(ids[lo:hi], kk),
-                        "neighbor_id": ids_sorted[top].ravel(),
-                        "cosine": np.take_along_axis(sims, top, axis=1).ravel(),
-                        "rank": np.tile(
-                            np.arange(1, kk + 1, dtype=np.int32), hi - lo
-                        ),
-                    }
-                )
-            )
-        return pd.concat(parts, ignore_index=True)
+        mat = unit_rows(pdf["vec"].to_numpy())
+        qid, nid, cos, rank = topk_per_row(ids, mat, ids, mat, k, digits)
+        return pd.DataFrame(
+            {"query_id": qid, "neighbor_id": nid, "cosine": cos, "rank": rank}
+        )
 
     # Explicit hash-repartition on the group key BEFORE the grouped
     # pandas stage: AQE coalesces post-shuffle partitions by BYTE size,
@@ -301,13 +248,10 @@ def _codebook_sims(
 
     cids = np.array([c[0] for c in centroids])
     assert (np.diff(cids) > 0).all(), "centroid ids must be ascending (tiebreak)"
-    cmat = np.array([c[1] for c in centroids], dtype=np.float64)
-    cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
+    cmat = unit_rows([c[1] for c in centroids])
 
     def sims(vec_series) -> "np.ndarray":
-        mat = np.vstack(vec_series.to_numpy()).astype(np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        return np.round(mat @ cmat.T, 6)
+        return np.round(unit_rows(vec_series.to_numpy()) @ cmat.T, 6)
 
     return cids, sims
 
@@ -422,23 +366,17 @@ def max_cosine_to_set(
     rids = np.array([i for i, _ in refs])
     if len(set(rids.tolist())) != len(rids):
         raise ValueError("duplicate ids in reference set")
-    rmat = np.stack([v for _, v in refs])
-    norms = np.linalg.norm(rmat, axis=1, keepdims=True)
-    if not norms.all():
+    rmat = unit_rows([v for _, v in refs])
+    if np.isnan(rmat).any():
         raise ValueError("zero-norm vector in reference set")
-    rmat = rmat / norms
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
             # zero-norm corpus rows yield NaN similarity (documented
-            # fallback) — silence the divide warning so the behavior
-            # holds under np.seterr / warnings-as-errors configs too
-            with np.errstate(invalid="ignore", divide="ignore"):
-                mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = np.round(mat @ rmat.T, 6)
+            # fallback)
+            sims = np.round(unit_rows(pdf[vec_col].to_numpy()) @ rmat.T, 6)
             best = sims.argmax(axis=1)  # first max ⇒ lowest ref id
             mx = sims[np.arange(len(best)), best]
             yield pd.DataFrame(
@@ -641,59 +579,6 @@ def ivf_topk(
     ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
-def cosine_topk_numpy(
-    emb: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force top-k with a numpy-matmul ``mapInPandas`` scorer.
-
-    The Arrow path: each partition arrives as pandas batches, the query
-    matrix (broadcast via closure — small) hits the batch in one BLAS
-    call. Wins over column algebra when dims ≫ 10³ or |Q| ≫ 10².
-    Returns (query_id, neighbor_id, cosine) unranked — feed to
-    ``per_group_top_k`` for the final cut (partial per-partition top-k
-    happens here first, so the shuffle carries ≤ |Q|·k rows/partition).
-    """
-    import numpy as np
-
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    qmat = np.array([q[1] for q in queries], dtype=np.float64)
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    kk = k
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ qnorm.T  # batch × |Q|
-            # Self-matches masked BEFORE the per-batch cut — otherwise the
-            # query's own vector (cosine 1.0) occupies a top-k slot and a
-            # genuine global neighbor can be silently dropped.
-            sims[ids[:, None] == qids[None, :]] = -np.inf
-            row_order = np.argsort(ids, kind="stable")  # deterministic ties
-            s = sims[row_order].T  # (|Q|, batch), neighbor-id ascending
-            take = min(kk, s.shape[1])
-            top = np.argsort(-s, axis=1, kind="stable")[:, :take]
-            cos = np.take_along_axis(s, top, axis=1).ravel()
-            keep = np.isfinite(cos)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, take)[keep],
-                    "neighbor_id": ids[row_order][top].ravel()[keep],
-                    "cosine": cos[keep],
-                }
-            )
-
-    out_schema = "query_id long, neighbor_id long, cosine double"
-    return emb.mapInPandas(score, schema=out_schema)
-
-
 # --- embedding quality control: per-label centroids & outliers ---------
 
 def label_centroids(
@@ -862,8 +747,9 @@ def semdedup_prune(
     Scale: the quadratic term is per-CLUSTER (Σ|cell|², the same bound
     as the per-bucket ANN gemm) — with a balanced codebook, cells are
     n/k-sized and the global cost is n²/k, tunable by ``n_centroids``;
-    pairwise scoring is one BLAS gram matrix per cell inside
-    ``applyInPandas``. Vectors shuffle ONCE (by cluster id).
+    pairwise scoring is one chunked BLAS gram pass per cell inside
+    ``applyInPandas`` (:func:`.kernels.pairs_at_least`, paired by id
+    value, so a duplicated id never prunes itself). Vectors shuffle ONCE (by cluster id).
     """
     from collections.abc import Iterator
 
@@ -898,16 +784,13 @@ def semdedup_prune(
     )
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        sim_mat = np.round(mat @ mat.T, 6)
         ids = pdf[id_col].to_numpy()
-        pruned_by = np.full(len(ids), np.nan)
-        for i in range(1, len(ids)):
-            dom = np.nonzero(sim_mat[i, :i] >= threshold)[0]
-            if len(dom):
-                pruned_by[i] = ids[dom[0]]  # ids ascending -> lowest id
+        a, b, _cos = pairs_at_least(
+            ids, unit_rows(pdf[vec_col].to_numpy()), threshold, digits=6
+        )
+        pruned_by = np.full(len(ids), np.inf)
+        np.minimum.at(pruned_by, b, ids[a].astype(np.float64))  # lowest id
+        pruned_by[np.isinf(pruned_by)] = np.nan
         return pd.DataFrame(
             {
                 id_col: ids,
@@ -1315,11 +1198,9 @@ def contrastive_pairs(
     q_rows = sorted(q_rows, key=lambda r: r[0])
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     q_labs = np.array([r[1] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r[2]) for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(q_mat, axis=1, keepdims=True)
-    if not qn.all():
+    q_mat = unit_rows([list(r[2]) for r in q_rows])
+    if np.isnan(q_mat).any():
         raise ValueError("zero-norm vector in query set")
-    q_mat /= qn
     digits = round_digits
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1328,11 +1209,9 @@ def contrastive_pairs(
                 continue
             ids = pdf[id_col].to_numpy()
             labs = pdf[label_col].to_numpy()
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
             # zero-norm corpus rows can never match: NaN similarities
             # are forced to -inf so they cannot hijack the argmax
-            with np.errstate(invalid="ignore", divide="ignore"):
-                mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+            mat = unit_rows(pdf[vec_col].to_numpy())
             order = np.argsort(ids, kind="stable")
             ids, labs, mat = ids[order], labs[order], mat[order]
             sims = np.round(mat @ q_mat.T, digits)  # (batch, nq)

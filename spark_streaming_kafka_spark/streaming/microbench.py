@@ -131,6 +131,7 @@ def stream_manifest_dedup(spark: SparkSession, sf_dir: str) -> None:
 
 
 def stream_sessionization(spark: SparkSession, sf_dir: str) -> None:
+    from .monitor import ProgressRecorder
     from .sessions import sentinel_sessions_stateful
 
     def build(d: str) -> None:
@@ -169,6 +170,8 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> None:
     src = _prep("sessions", sf_dir, build)
     expected = _PREPARED_ROWS[src]
     work = _fresh_dir()
+    rec = ProgressRecorder()
+    spark.streams.addListener(rec)
     try:
         parsed = (
             spark.readStream.schema(
@@ -184,6 +187,11 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> None:
         # with an immediate processing-time trigger instead and stop
         # once the source progress shows every input row consumed —
         # same 8 data micro-batches, deterministic work, bounded run.
+        # The drain is read from a listener's running row total: the
+        # query's ``recentProgress`` is a bounded ring that empty timer
+        # batches can push data batches out of.
+        import time
+
         q = (
             sentinel_sessions_stateful(parsed)
             .writeStream.format("noop")
@@ -191,23 +199,15 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> None:
             .trigger(processingTime="0 seconds")
             .start()
         )
-        import time
-
         deadline = time.time() + 300
-        seen: dict[int, int] = {}
-        while time.time() < deadline:
-            for p in q.recentProgress:
-                seen[p["batchId"]] = sum(
-                    s["numInputRows"] for s in p["sources"]
-                )
-            if sum(seen.values()) >= expected:
-                break
+        while time.time() < deadline and rec.total_input_rows() < expected:
             time.sleep(0.1)
         q.stop()
-        assert sum(seen.values()) >= expected, (
+        assert rec.total_input_rows() >= expected, (
             "sessionization micro-bench did not consume all input"
         )
     finally:
+        spark.streams.removeListener(rec)
         shutil.rmtree(work, ignore_errors=True)
 
 

@@ -9,7 +9,8 @@ module wraps ``StreamingQueryListener`` (driver-side callbacks, zero
 cost on the executor path) into:
 
 - :class:`ProgressRecorder` — in-memory ring of recent
-  ``QueryProgress`` summaries (one dict per micro-batch).
+  ``QueryProgress`` summaries (one dict per micro-batch), plus a
+  running input-row total the ring's eviction cannot lose.
 - :func:`falling_behind` — the standard backpressure predicate:
   processing time persistently exceeding the trigger interval means
   the stream is accumulating lag and needs either a bigger cluster,
@@ -34,6 +35,7 @@ class ProgressRecorder(StreamingQueryListener):
 
     def __init__(self, keep: int = 256) -> None:
         self.progress: deque[dict] = deque(maxlen=keep)
+        self._input_rows = 0
         self.started: list[str] = []
         self.terminated: list[str] = []
 
@@ -43,6 +45,7 @@ class ProgressRecorder(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
+        self._input_rows += p.numInputRows or 0
         self.progress.append(
             {
                 "query_id": str(p.id),
@@ -64,7 +67,10 @@ class ProgressRecorder(StreamingQueryListener):
         return list(self.progress)
 
     def total_input_rows(self) -> int:
-        return sum(b["num_input_rows"] or 0 for b in self.progress)
+        """Input rows over EVERY progress event seen, not just the
+        ``keep`` still in the ring — a drain check must not lose the
+        batches the ring has evicted."""
+        return self._input_rows
 
 
 def falling_behind(

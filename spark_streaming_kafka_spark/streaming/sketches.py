@@ -25,6 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..functions.hashing import md5_60
 from ..operators.sketches import hll_estimate, hll_sketch
 
 __all__ = ["hll_stream_monitor"]
@@ -146,7 +147,6 @@ def kmv_stream_monitor(
     :func:`..operators.sketches.kmv_merge` — without touching the
     state store. Pinned by test against the batch estimators.
     """
-    import hashlib
     from decimal import ROUND_HALF_UP, Decimal
 
     import pandas as pd
@@ -166,7 +166,7 @@ def kmv_stream_monitor(
         hs = set(state.get[0]) if state.exists else set()
         for pdf in pdfs:
             for v in pd.unique(pdf[key_col].dropna().astype(str)):
-                hs.add(int(hashlib.md5(v.encode()).hexdigest()[:15], 16))
+                hs.add(md5_60(v))
         bottom = sorted(hs)[:k]
         state.update((bottom,))
         if len(bottom) < k:

@@ -181,29 +181,26 @@ def test_lsh_results_subset_of_bucketmates_and_agree_with_bruteforce(spark, emb)
         assert buckets[r["query_id"]] == buckets[r["neighbor_id"]]
 
 
-def test_numpy_scorer_matches_column_algebra(spark, emb):
-    qrows = emb.filter(F.col("vec_id") < 2).collect()
-    queries = [(r["vec_id"], list(r["embedding"])) for r in qrows]
-    scored = sim.cosine_topk_numpy(emb, queries, k=500)
-    qdf = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = sim.cosine_topk(emb, qdf, k=5, round_digits=6)
-    approx_top = {}
-    from spark_streaming_kafka_spark.operators.windows import per_group_top_k
+def test_lsh_topk_duplicate_ids_emit_no_self_rows(spark):
+    """A vec_id that appears twice in one bucket is a self-match for
+    both rows: no (x, x, -inf) row may be emitted, every cosine is
+    finite, and ranks stay 1..n per query row."""
+    import math
 
-    ranked = per_group_top_k(
-        scored.withColumn("cosine", F.round("cosine", 6)),
-        "query_id",
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        5,
+    v = [1.0, 0.5, 0.25]
+    vecs = spark.createDataFrame(
+        [(7, v), (7, v), (8, v)], "vec_id long, embedding array<double>"
     )
-    for r in ranked.collect():
-        approx_top[(r["query_id"], r["rank"])] = (r["neighbor_id"], r["cosine"])
-    for r in exact.collect():
-        nid, cos = approx_top[(r["query_id"], r["rank"])]
-        assert nid == r["neighbor_id"]
-        assert cos == pytest.approx(r["cosine"], abs=1e-6)
+    rows = sim.lsh_cosine_topk(vecs, k=2, n_planes=2, dim=3).collect()
+    assert rows
+    assert all(r["query_id"] != r["neighbor_id"] for r in rows)
+    assert all(math.isfinite(r["cosine"]) for r in rows)
+    got = sorted((r["query_id"], r["neighbor_id"], r["rank"]) for r in rows)
+    assert got == [(7, 8, 1), (7, 8, 1), (8, 7, 1), (8, 7, 2)]
+    only_dups = spark.createDataFrame(
+        [(7, v), (7, v)], "vec_id long, embedding array<double>"
+    )
+    assert sim.lsh_cosine_topk(only_dups, k=1, n_planes=2, dim=3).count() == 0
 
 
 def test_embedding_near_dup_bucketed_path_no_self_join(spark):

@@ -500,3 +500,25 @@ def test_transition_stream_pairs_match_batch(spark, tmp_path):
     assert got == expected
     # the cross-batch edge specifically
     assert (1, "click", "purchase") in got
+
+
+def test_progress_recorder_total_survives_ring_eviction():
+    """The running input-row total counts every progress event, not
+    just the ``keep`` the ring still holds — a drain check built on it
+    cannot lose evicted batches."""
+    from types import SimpleNamespace
+
+    from spark_streaming_kafka_spark.streaming.monitor import ProgressRecorder
+
+    rec = ProgressRecorder(keep=2)
+    for i, rows in enumerate((10, 20, 30, 40, 50)):
+        rec.onQueryProgress(
+            SimpleNamespace(
+                progress=SimpleNamespace(
+                    id="q", batchId=i, numInputRows=rows,
+                    durationMs={"triggerExecution": 5}, timestamp="",
+                )
+            )
+        )
+    assert [b["batch_id"] for b in rec.batches()] == [3, 4]
+    assert rec.total_input_rows() == 150

@@ -21,6 +21,7 @@ sentences).
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -30,19 +31,6 @@ import traceback
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-_raw = list(sys.argv[1:])
-JSON_OUT = None
-if "--json" in _raw:
-    i = _raw.index("--json")
-    if i + 1 >= len(_raw) or _raw[i + 1].startswith("--"):
-        sys.exit("usage: --json OUT.json requires a filename")
-    JSON_OUT = _raw[i + 1]
-    del _raw[i : i + 2]
-_ARGS = [a for a in _raw if a != "--vanilla"]
-VANILLA = "--vanilla" in _raw
-SF_DIR = _ARGS[0] if _ARGS else "/root/testdata/sf0.01"
-ONLY = set(_ARGS[1:])
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -63,10 +51,32 @@ def normalize(rows, cols):
     return out
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Parse the command line; a query name that is not a registry
+    entry is an error (exit 2), never a silent "0 passed" run."""
+    import bench
+    from spark_streaming_kafka_spark.queries import QUERIES
+
+    p = argparse.ArgumentParser(description="Spark queries vs DuckDB oracles.")
+    p.add_argument("--vanilla", action="store_true",
+                   help="bare SparkSession, no engine conf")
+    p.add_argument("--json", dest="json_out", metavar="OUT.json")
+    p.add_argument("sf_dir", nargs="?",
+                   default=os.path.join(os.path.dirname(bench.SF_DIR), "sf0.01"))
+    p.add_argument("queries", nargs="*", metavar="query",
+                   help="only these registry queries (default: all)")
+    args = p.parse_intermixed_args(argv)
+    unknown = [q for q in args.queries if q not in QUERIES]
+    if unknown:
+        p.error(f"not in the query registry: {' '.join(unknown)}")
+    return args
+
+
 def main() -> int:
+    args = parse_args()
     import __spark_entry__ as entrymod
 
-    if VANILLA:
+    if args.vanilla:
         # Bare session: no SQL/engine conf at all — the grading
         # driver's SEMANTICS environment. JVM sizing is not semantics:
         # the 1g default driver heap is sized for per-query sf0.01
@@ -98,7 +108,7 @@ def main() -> int:
 
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -129,12 +139,12 @@ def main() -> int:
             pass  # hygiene must never fail the sweep
 
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if args.queries and name not in args.queries:
             continue
         _release_cached_state()  # free the previous query's blocks
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, args.sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception:
@@ -183,16 +193,16 @@ def main() -> int:
             report[name] = {"status": "PASS", "rows": len(srows),
                             "sec": round(time.time() - t0, 1)}
     print(f"\n{n_pass} passed, {n_fail} failed")
-    if JSON_OUT:
-        with open(JSON_OUT, "w") as f:
+    if args.json_out:
+        with open(args.json_out, "w") as f:
             json.dump(
                 {
-                    "sf_dir": SF_DIR,
-                    "mode": "vanilla" if VANILLA else "engine",
+                    "sf_dir": args.sf_dir,
+                    "mode": "vanilla" if args.vanilla else "engine",
                     "driver_memory": os.environ.get(
                         "SPARK_GRAFT_SWEEP_MEM", "8g"
                     )
-                    if VANILLA
+                    if args.vanilla
                     else None,
                     "n_pass": n_pass,
                     "n_fail": n_fail,
@@ -201,7 +211,7 @@ def main() -> int:
                 f,
                 indent=1,
             )
-        print(f"wrote {JSON_OUT}")
+        print(f"wrote {args.json_out}")
     return 1 if n_fail else 0
 
 

@@ -28,11 +28,14 @@ spark_streaming_kafka_spark/data/als_factors/{user,item}.parquet)
 
 from __future__ import annotations
 
-import hashlib
 import os
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from spark_streaming_kafka_spark.functions.hashing import md5_60  # noqa: E402
 
 RANK = 4
 N_USERS = 1000  # ids 0..999
@@ -53,8 +56,7 @@ def pinned_feature(kind: str, ident: int, dim: int) -> float:
     AS BIGINT); the % / division / subtraction are the same double ops
     in Python, Spark, and DuckDB (round-to-nearest each step).
     """
-    h = int(hashlib.md5(f"{kind}_{ident}_{dim}".encode()).hexdigest()[:15], 16)
-    return (h % 1_000_000) / 1_000_000.0 - 0.5
+    return (md5_60(f"{kind}_{ident}_{dim}") % 1_000_000) / 1_000_000.0 - 0.5
 
 
 def factor_table(kind: str, ids: range) -> pa.Table:
